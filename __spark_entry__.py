@@ -1624,7 +1624,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         if not query.awaitTermination(300):
             query.stop()
             raise TimeoutError("politeness stream did not drain in 300s")
-        return spark.read.parquet(sched + "/*").select(
+        return spark.read.parquet(*sj._store_parts(spark, sched)).select(
             "host", "event_id", "fetch_idx", "scheduled_at_s", "worker"
         )
 

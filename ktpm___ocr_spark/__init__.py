@@ -18,4 +18,7 @@ lineage + row/byte metrics.
 
 __version__ = "0.1.0"
 
+from ktpm___ocr_spark import zipcache
 from ktpm___ocr_spark.session import get_spark  # noqa: F401
+
+zipcache.install()  # runs in every Python worker that imports the engine

@@ -51,6 +51,10 @@ LSH_BANDS = 4  # 4 bands × 4 rows ≈ catches jaccard ≳ 0.6
 SHINGLE_N = 3
 BAND_HEX = 16  # hex chars of the band sha kept — 64-bit buckets; band
 # collisions only cost a wasted exact-Jaccard verify, never a bad pair
+_STALE_BAND_TAIL = (
+    f" hex chars, expected {BAND_HEX} — the band table predates the current "
+    "minhash family; rebuild it with lsh_bands() before probing"
+)
 
 # The k fixed 60-bit xor-salts of the minhash family — derived once from
 # sha256 so any engine can re-derive them, and injected as LITERALS into
@@ -734,93 +738,111 @@ def incremental_near_dups(
       never a corpus scan with compute on it);
     * ``new_docs`` — the increment. Id spaces must be disjoint.
 
-    Only the increment is shingled/hashed: its bands probe the old band
-    table by ``(band_idx, band_hash)`` equi-join (new-vs-old candidates)
-    and self-join (new-vs-new), then exact-Jaccard verification runs on
-    candidates only. Cost per increment is O(|new| · bands) hashing +
-    joins keyed on band buckets — independent of |old| except for the
-    band-table probe itself, exactly the property that makes nightly
-    crawls affordable against a 10^12-doc corpus.
+    Only the increment is shingled/hashed: ONE ``(band_idx, band_hash)``
+    equi-join probes its bands against the old band table (new-vs-old
+    candidates) and against themselves (new-vs-new), then exact-Jaccard
+    verification runs on candidates only. Cost per increment is
+    O(|new| · bands) hashing + joins keyed on band buckets — independent
+    of |old| except for the band-table probe itself, exactly the property
+    that makes nightly crawls affordable against a 10^12-doc corpus.
 
     Output: ``(id_a, id_b, pair_kind, jaccard)`` with ``id_a < id_b``
     and ``pair_kind ∈ {'new_old', 'new_new'}``. Equivalent (and
     oracle-checked) reformulation: the full-corpus LSH pair set
     restricted to pairs touching the increment — minus the old-old pairs
     an incremental run must never pay for.
+
+    ``eager=False`` is pure plan construction — no Spark action runs and
+    nothing is persisted, so a caller (the streaming face) can fuse the
+    probe, verify and its own write into one job. Pass ``new_bands``
+    read from storage there: the increment's bands feed both sides of
+    the candidate join and would otherwise be banded once per side.
     """
-    # format guard (bounded O(1) control-flow probe, same class as the
-    # k-means/BPE driver reads): the r7 single-hash family shortened
-    # band_hash from 64 to BAND_HEX=16 hex chars; a persisted PRE-r7
-    # band table would silently match zero old-vs-new candidates — every
-    # cross-snapshot dup missed with no error. One head row tells.
-    # Only on the EAGER path: eager=False is documented as pure plan
-    # construction (the streaming face calls it per micro-batch, where a
-    # driver action per call is real overhead), so a lazy caller owns the
-    # format contract. Known bypass either way: an EMPTY old_bands yields
-    # no probe row — harmless, an empty table has no stale rows to match.
+    # format guard: the r7 single-hash family shortened band_hash from 64
+    # to BAND_HEX=16 hex chars; a persisted PRE-r7 band table would
+    # silently match zero old-vs-new candidates — every cross-snapshot
+    # dup missed with no error. Eager: one head row tells, before any
+    # work (an EMPTY old_bands yields no row — harmless, it has no stale
+    # rows to match). Lazy: the check moves INTO the plan as a
+    # raise_error on every old-band row the probe reads, at no extra job.
     if eager:
         head = old_bands.select(F.length("band_hash").alias("n")).head(1)
         if head and head[0]["n"] != BAND_HEX:
             raise ValueError(
-                f"old_bands.band_hash is {head[0]['n']} hex chars, expected "
-                f"{BAND_HEX} — the band table predates the current minhash "
-                "family; rebuild it with lsh_bands() before probing"
+                f"old_bands.band_hash is {head[0]['n']}{_STALE_BAND_TAIL}"
             )
-    par = new_docs.sparkSession.sparkContext.defaultParallelism
-    new_docs = new_docs.repartition(par, id_col)
-    # a caller that has already banded the increment (e.g. the streaming
-    # face, which also appends the bands to the store) passes them in so
-    # the sha256-heavy banding stage — the dominant per-increment cost —
-    # runs exactly once (r5 review finding)
-    nb = (
-        new_bands
-        if new_bands is not None
-        else lsh_bands(new_docs, id_col, text_col, k, bands, impl=impl)
-    ).persist()
+    else:
+        old_bands = old_bands.withColumn(
+            "band_hash",
+            F.when(
+                F.length("band_hash") != BAND_HEX,
+                F.raise_error(
+                    F.concat(
+                        F.lit("old_bands.band_hash is "),
+                        F.length("band_hash").cast("string"),
+                        F.lit(_STALE_BAND_TAIL),
+                    )
+                ),
+            ).otherwise(F.col("band_hash")),
+        )
+    if new_bands is None:
+        par = new_docs.sparkSession.sparkContext.defaultParallelism
+        new_docs = new_docs.repartition(par, id_col)
+        nb = lsh_bands(new_docs, id_col, text_col, k, bands, impl=impl)
+    else:
+        # a caller that has already banded the increment (the streaming
+        # face, which also appends the bands to the store) passes them in
+        # so the sha256-heavy banding runs exactly once; new_docs then
+        # only feeds the texts union, which needs no repartition
+        nb = new_bands
+    if eager:
+        nb = nb.persist()  # both sides of the candidate join read it
     try:
-        n, o = nb.alias("n"), old_bands.alias("o")
-        cross = (
+        # ONE band-bucket join yields both candidate kinds: the
+        # increment's bands probe the old bands (new_old) and themselves
+        # (new_new, each unordered pair once via id_a < id_b)
+        band_cols = (id_col, "band_idx", "band_hash")
+        probed = old_bands.select(
+            *band_cols, F.lit("new_old").alias("pair_kind")
+        ).unionByName(
+            nb.select(*band_cols, F.lit("new_new").alias("pair_kind"))
+        )
+        n, o = nb.alias("n"), probed.alias("o")
+        n_id, o_id = F.col(f"n.{id_col}"), F.col(f"o.{id_col}")
+        cand = (
             n.join(
                 o,
                 (F.col("n.band_idx") == F.col("o.band_idx"))
                 & (F.col("n.band_hash") == F.col("o.band_hash"))
-                # id spaces SHOULD be disjoint (precondition); the guard
-                # keeps a violated precondition from emitting degenerate
-                # (x, x) self-pairs instead of corrupting downstream joins
-                & (F.col(f"n.{id_col}") != F.col(f"o.{id_col}")),
+                # id spaces SHOULD be disjoint (precondition); the new_old
+                # guard keeps a violated precondition from emitting degenerate
+                # (x, x) self-pairs
+                & F.when(F.col("o.pair_kind") == "new_new", n_id < o_id)
+                .otherwise(n_id != o_id),
             )
             .select(
-                F.least(F.col(f"n.{id_col}"), F.col(f"o.{id_col}")).alias("id_a"),
-                F.greatest(F.col(f"n.{id_col}"), F.col(f"o.{id_col}")).alias("id_b"),
+                F.least(n_id, o_id).alias("id_a"),
+                F.greatest(n_id, o_id).alias("id_b"),
+                F.col("o.pair_kind"),
             )
             .distinct()
-            .withColumn("pair_kind", F.lit("new_old"))
         )
-        l, r = nb.alias("l"), nb.alias("r")
-        newnew = (
-            l.join(
-                r,
-                (F.col("l.band_idx") == F.col("r.band_idx"))
-                & (F.col("l.band_hash") == F.col("r.band_hash"))
-                & (F.col(f"l.{id_col}") < F.col(f"r.{id_col}")),
-            )
+        # both text lookups join the SAME relation, renamed only above the
+        # joins, so the plan builds (and broadcasts) the text side once
+        texts = old_texts.select(id_col, text_col).unionByName(
+            new_docs.select(id_col, text_col)
+        )
+        ta, tb = texts.alias("ta"), texts.alias("tb")
+        joined = (
+            cand.join(ta, F.col("id_a") == F.col(f"ta.{id_col}"))
+            .join(tb, F.col("id_b") == F.col(f"tb.{id_col}"))
             .select(
-                F.col(f"l.{id_col}").alias("id_a"),
-                F.col(f"r.{id_col}").alias("id_b"),
+                "id_a",
+                "id_b",
+                "pair_kind",
+                F.col(f"ta.{text_col}").alias("text_a"),
+                F.col(f"tb.{text_col}").alias("text_b"),
             )
-            .distinct()
-            .withColumn("pair_kind", F.lit("new_new"))
-        )
-        cand = cross.unionByName(newnew)
-        texts = old_texts.select(
-            F.col(id_col), F.col(text_col)
-        ).unionByName(new_docs.select(F.col(id_col), F.col(text_col)))
-        joined = cand.join(
-            texts.withColumnsRenamed({id_col: "id_a", text_col: "text_a"}),
-            "id_a",
-        ).join(
-            texts.withColumnsRenamed({id_col: "id_b", text_col: "text_b"}),
-            "id_b",
         )
         verified = (
             _verify_jaccard(joined, impl)
@@ -828,17 +850,13 @@ def incremental_near_dups(
             .select("id_a", "id_b", "pair_kind", "jaccard")
         )
         if not eager:
-            # lazy return: the full pre-execution plan stays inspectable
-            # (the no-reband plan test) and a caller can fuse further
-            # stages into one job. The band persist below is released
-            # immediately, so the increment's bands evaluate once per
-            # consuming join instead — the caller owns the lifecycle.
             return verified
         # same persist hygiene as minhash_near_dups: materialize the small
         # verified set, release the increment's bands before returning
         return verified.localCheckpoint(eager=True)
     finally:
-        nb.unpersist()
+        if eager:
+            nb.unpersist()
 
 
 def _release_checkpoint(df: DataFrame) -> None:

@@ -139,13 +139,15 @@ def stream_sessions(
     )
 
 
-def _store_parts(spark, root: str, exclude: str) -> list[str]:
-    """Subdirectories of a per-batch store, minus this batch's own —
-    listed via the Hadoop FS API so any scheme (file://, hdfs://,
-    s3a://) works. The subdir-per-batch layout is what makes
+def _store_parts(spark, root: str, exclude: str | None = None) -> list[str]:
+    """Subdirectories of a per-batch store, minus ``exclude`` (this
+    batch's own) — listed via the Hadoop FS API so any scheme (file://,
+    hdfs://, s3a://) works. The subdir-per-batch layout is what makes
     at-least-once replay exactly-once: a replayed batch re-reads exactly
     the pre-batch store state and OVERWRITES (never re-appends) its own
-    outputs."""
+    outputs. Read a whole store with ``spark.read.parquet(*parts)``, not
+    a ``root + "/*"`` glob: a glob read makes Spark probe every match for
+    a ``FileStreamSink`` metadata log and log a WARN with a stack trace."""
     jvm = spark._jvm
     p = jvm.org.apache.hadoop.fs.Path(root)
     fs = p.getFileSystem(spark._jsc.hadoopConfiguration())
@@ -196,32 +198,40 @@ def incremental_dedup_stream(
 ):
     """Streaming face of ``dedup.incremental_near_dups``: each micro-batch
     of newly crawled docs is banded and probed against the PERSISTED band
-    store via ``foreachBatch``, appending verified near-dup pairs; the
-    batch's own bands and texts are then appended to the stores, so every
-    later batch sees this one as "existing corpus" — cross-batch dups are
-    caught without ever re-banding history. ``pair_kind`` is relative to
-    the probing batch (a dup against ANY earlier doc is ``new_old``).
+    store via ``foreachBatch``, writing verified near-dup pairs; the
+    batch's own bands and texts join the stores, so every later batch
+    sees this one as "existing corpus" — cross-batch dups are caught
+    without ever re-banding history. ``pair_kind`` is relative to the
+    probing batch (a dup against ANY earlier doc is ``new_old``).
 
     This is the nightly-crawl composition at 100 TB: the stores are
     Iceberg tables (bands bucketed by (band_idx, band_hash)) fed by
     MERGE; here each store is a directory of SUBDIRECTORIES — seed the
     existing corpus into ``{band_dir}/seed`` / ``{text_dir}/seed``
-    (``lsh_bands`` + an (id, text) projection), and each micro-batch
-    OVERWRITES its own ``b{batch_id}`` subdir. That layout is what makes
-    at-least-once replay exactly-once (r5 review): a replayed batch
-    re-reads exactly the pre-batch store state (its own subdir is
-    excluded from the probe) and overwrites — never re-appends — its
-    three outputs, so partial-failure replays converge instead of
-    duplicating pairs or double-growing the stores. Read the pair output
-    with ``spark.read.parquet(pairs_dir + "/*")``.
+    (``lsh_bands`` + an (id, text) projection), or leave the stores
+    empty to start from nothing; each micro-batch OVERWRITES its own
+    ``b{batch_id}`` subdir.
 
-    ``pair_kind`` is relative to the probing batch (a dup against ANY
-    earlier doc is ``new_old``).
+    A batch is three Spark jobs, in this order: write its ``(id, text)``
+    to ``{text_dir}/b{id}``; band that written table into
+    ``{band_dir}/b{id}``; then one fused probe-verify-write of the
+    pairs to ``{pairs_dir}/b{id}``, built lazily over parquet reads of
+    the stores and of the batch's own two outputs. The writes are the
+    materialization — nothing is checkpointed or cached — and every
+    read takes its schema from the batch or its band output, so no
+    read infers a schema (an unseeded store reads as empty).
+
+    At-least-once replay stays exactly-once: the probe reads every store
+    subdir EXCEPT the batch's own, so a replayed batch sees exactly the
+    pre-batch store state, and it overwrites — never re-appends — its
+    three outputs, so partial-failure replays converge instead of
+    duplicating pairs or double-growing the stores. Read the
+    pair output with ``spark.read.parquet(*_store_parts(spark,
+    pairs_dir))``.
 
     Returns the DataStreamWriter — caller ``.start()``s it.
     """
     from ktpm___ocr_spark.operators.dedup import (
-        _release_checkpoint,
         incremental_near_dups,
         lsh_bands,
     )
@@ -229,26 +239,26 @@ def incremental_dedup_stream(
     def process(batch_df: DataFrame, batch_id: int) -> None:
         spark = batch_df.sparkSession
         sub = f"b{batch_id}"
-        batch_df = batch_df.localCheckpoint(eager=True)  # bands+texts+probe
-        # band the increment ONCE (sha256-heavy): the same materialized
-        # relation serves the probe join and the band-store write
-        nb = lsh_bands(batch_df, id_col, text_col).localCheckpoint(eager=True)
-        pairs = incremental_near_dups(
-            spark.read.parquet(*_store_parts(spark, band_dir, sub)),
-            spark.read.parquet(*_store_parts(spark, text_dir, sub)),
-            batch_df,
+        texts_out, bands_out = f"{text_dir}/{sub}", f"{band_dir}/{sub}"
+
+        def read(schema, *paths) -> DataFrame:
+            return spark.read.schema(schema).parquet(*paths)
+
+        docs = batch_df.select(id_col, text_col)
+        docs.write.mode("overwrite").parquet(texts_out)
+        new_docs = read(docs.schema, texts_out)
+        bands = lsh_bands(new_docs, id_col, text_col)
+        bands.write.mode("overwrite").parquet(bands_out)
+        incremental_near_dups(
+            read(bands.schema, *_store_parts(spark, band_dir, sub)),
+            read(docs.schema, *_store_parts(spark, text_dir, sub)),
+            new_docs,
             id_col=id_col,
             text_col=text_col,
             threshold=threshold,
-            new_bands=nb,
-        )
-        pairs.write.mode("overwrite").parquet(f"{pairs_dir}/{sub}")
-        nb.write.mode("overwrite").parquet(f"{band_dir}/{sub}")
-        batch_df.select(id_col, text_col).write.mode("overwrite").parquet(
-            f"{text_dir}/{sub}"
-        )
-        for ckpt in (pairs, nb, batch_df):  # bound executor storage to
-            _release_checkpoint(ckpt)  # one batch's blocks (r5 review)
+            new_bands=read(bands.schema, bands_out),
+            eager=False,
+        ).write.mode("overwrite").parquet(f"{pairs_dir}/{sub}")
 
     return src.writeStream.foreachBatch(process).trigger(availableNow=True)
 
@@ -315,7 +325,8 @@ def politeness_fetch_stream(
     the sticky worker mapping means a 1000-executor fetch fleet needs no
     shared limiter (same property as the batch operator).
 
-    Read the schedule with ``spark.read.parquet(schedule_dir + "/*")``.
+    Read the schedule with ``spark.read.parquet(*_store_parts(spark,
+    schedule_dir))``.
     Returns the DataStreamWriter — caller ``.start()``s it.
 
     Reference anchor: per-key rate limiting / queue pacing

@@ -361,6 +361,27 @@ def test_nightly_increment_never_rebands_old_side(spark, sf001_dir, tmp_path):
     )
     assert "band_hash" in _plan(lazy)
 
+    # the streaming face's plan (increment bands passed in): both
+    # candidate kinds come from ONE band-bucket join, and the increment
+    # is not repartitioned (which side is broadcast depends on sizes)
+    inc_bands = str(tmp_path / "inc_bands")
+    dd.lsh_bands(inc, "doc_id", "text").write.parquet(inc_bands)
+    fused = _plan(
+        dd.incremental_near_dups(
+            old_bands,
+            old,
+            inc,
+            threshold=0.4,
+            new_bands=spark.read.parquet(inc_bands),
+            eager=False,
+        )
+    )
+    band_joins = [
+        ln for ln in fused.splitlines() if "Join" in ln and "band_hash" in ln
+    ]
+    assert len(band_joins) == 1, fused
+    assert "REPARTITION_BY_NUM" not in fused, fused
+
 
 def test_gopher_gate_zero_exchange_projection(spark, sf01_dir):
     """The quality gate is a pure projection since the r6 in-row

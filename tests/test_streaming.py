@@ -276,6 +276,79 @@ def test_incremental_dedup_stream_cross_batch(spark, tmp_path):
     assert spark.read.parquet(text_dir + "/*").count() == 5
 
 
+def _inc_stream(spark, tmp_path, batches):
+    """One parquet file per micro-batch (``maxFilesPerTrigger=1``)."""
+    inc_dir = tmp_path / "inc"
+    inc_dir.mkdir()
+    for i, rows in enumerate(batches):
+        spark.createDataFrame(rows, "doc_id bigint, text string").coalesce(
+            1
+        ).write.parquet(str(inc_dir / f"{chr(97 + i)}.parquet"))
+    return (
+        spark.readStream.schema("doc_id bigint, text string")
+        .option("maxFilesPerTrigger", 1)
+        .parquet(str(inc_dir) + "/*/")
+    )
+
+
+def test_incremental_dedup_stream_unseeded_stores(spark, tmp_path):
+    """Empty band and text stores are a valid start (the first night of
+    a crawl): batch 0 probes nothing old and emits only its internal
+    new_new pair; batch 1 catches its dup of a batch-0 doc."""
+    from ktpm___ocr_spark.streaming.jobs import incremental_dedup_stream
+
+    base = "the quick brown fox jumps over the lazy dog again and again today"
+    band_dir, text_dir = tmp_path / "bands", tmp_path / "texts"
+    band_dir.mkdir()
+    text_dir.mkdir()
+    pairs_dir = str(tmp_path / "pairs")
+    src = _inc_stream(
+        spark, tmp_path, [[(101, base), (102, base)], [(201, base)]]
+    )
+    q = incremental_dedup_stream(
+        src, str(band_dir), str(text_dir), pairs_dir
+    ).start()
+    assert q.awaitTermination(180), "stream must drain both files"
+    assert q.exception() is None, q.exception()
+
+    def batch_pairs(sub):
+        return {
+            (r["id_a"], r["id_b"]): r["pair_kind"]
+            for r in spark.read.parquet(f"{pairs_dir}/{sub}").collect()
+        }
+
+    assert batch_pairs("b0") == {(101, 102): "new_new"}
+    assert batch_pairs("b1") == {(101, 201): "new_old", (102, 201): "new_old"}
+
+
+def test_incremental_dedup_stream_rejects_stale_band_store(spark, tmp_path):
+    """A seeded band store in the pre-r7 64-hex format must fail the
+    stream loudly, not match zero cross-batch candidates: the lazy
+    probe carries the format guard inside its plan."""
+    from pyspark.errors import StreamingQueryException
+
+    from ktpm___ocr_spark.streaming.jobs import incremental_dedup_stream
+
+    base = "the quick brown fox jumps over the lazy dog again and again today"
+    band_dir = str(tmp_path / "bands")
+    text_dir = str(tmp_path / "texts")
+    spark.createDataFrame(
+        [(1, b, "ab" * 32) for b in range(4)],
+        "doc_id bigint, band_idx int, band_hash string",
+    ).write.parquet(f"{band_dir}/seed")
+    spark.createDataFrame(
+        [(1, base)], "doc_id bigint, text string"
+    ).write.parquet(f"{text_dir}/seed")
+    src = _inc_stream(spark, tmp_path, [[(101, base)]])
+    q = incremental_dedup_stream(
+        src, band_dir, text_dir, str(tmp_path / "pairs")
+    ).start()
+    with pytest.raises(
+        StreamingQueryException, match="rebuild it with lsh_bands"
+    ):
+        q.awaitTermination(180)
+
+
 def test_stream_sessions_equals_batch(spark, events_dir):
     """Streaming session_window (merging windows + watermark) must
     produce exactly the batch sessionization on the same finite input

@@ -711,8 +711,10 @@ def test_incremental_near_dups_lazy_path_skips_format_probe(spark):
     """eager=False is documented as pure plan construction (the streaming
     face calls it per micro-batch): the stale-band-format guard must not
     fire a driver action there — construction with a stale 64-hex band
-    table succeeds lazily, while the default eager path raises (r7
-    advice)."""
+    table runs no job, executing the plan raises, and the default eager
+    path raises up front (r7 advice)."""
+    from pyspark.errors import SparkRuntimeException
+
     from ktpm___ocr_spark.operators.dedup import incremental_near_dups
 
     stale = spark.createDataFrame(
@@ -725,7 +727,17 @@ def test_incremental_near_dups_lazy_path_skips_format_probe(spark):
     inc = spark.createDataFrame(
         [(101, "new increment text")], "doc_id bigint, text string"
     )
-    lazy = incremental_near_dups(stale, old_texts, inc, eager=False)
+    sc = spark.sparkContext
+    sc.setJobGroup("lazy-probe", "construction only")
+    try:
+        lazy = incremental_near_dups(stale, old_texts, inc, eager=False)
+    finally:
+        sc._jsc.clearJobGroup()
+    assert sc.statusTracker().getJobIdsForGroup("lazy-probe") == []
     assert lazy.columns == ["id_a", "id_b", "pair_kind", "jaccard"]
+    # the guard lives in the lazy plan: executing it over the stale table
+    # raises instead of silently matching zero candidates
+    with pytest.raises(SparkRuntimeException, match="band table predates"):
+        lazy.collect()
     with pytest.raises(ValueError, match="band table predates"):
         incremental_near_dups(stale, old_texts, inc)  # eager default
